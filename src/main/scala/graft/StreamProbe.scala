@@ -19,6 +19,8 @@ import org.apache.spark.sql.streaming.Trigger
   * batch — a batch job in disguise).
   *
   * Usage: tools/run_main.sh graft.StreamProbe <eventsDir> [nChunks]
+  * Runs `local[SPARK_GRAFT_CPUS]` (default: every available core) with
+  * as many shuffle partitions.
   * Not part of the driver contract.
   */
 object StreamProbe {
@@ -27,9 +29,11 @@ object StreamProbe {
     require(new java.io.File(inDir).exists(),
       s"$inDir absent — pass an events.parquet file or directory")
     val nChunks = args.lift(1).map(_.toInt).getOrElse(16)
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")

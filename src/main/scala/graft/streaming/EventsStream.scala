@@ -32,8 +32,25 @@ object EventsStream {
   }
 
   /** `ts_utc` column for the schema resolved from `inputDir`. */
-  private[streaming] def tsUtcFor(schema: StructType) =
+  private def tsUtcFor(schema: StructType) =
     graft.sources.Tables.tsUtc(schema("ts").dataType)
+
+  /** The events file source every graft.streaming pipeline reads: schema
+    * resolved from `inputDir`, `ts_utc` derived, and at most one new
+    * file per micro-batch unless `throttled` is false. Installs
+    * [[LocalCheckpointFileManager]] for the session first, so the
+    * query's offset/commit logs, state stores and sink metadata skip
+    * the process-fork path on local checkpoints.
+    */
+  private[streaming] def source(spark: SparkSession, inputDir: String,
+      throttled: Boolean = true): DataFrame = {
+    LocalCheckpointFileManager.install(spark)
+    val schema = resolvedSchema(spark, inputDir)
+    val reader = spark.readStream.schema(schema)
+    (if (throttled) reader.option("maxFilesPerTrigger", 1) else reader)
+      .parquet(inputDir)
+      .withColumn("ts_utc", tsUtcFor(schema))
+  }
 
   /** Streaming exact-dedup of re-synced events: the same payload
     * arriving again (offline-sync retries — the ETL reference's
@@ -46,12 +63,7 @@ object EventsStream {
     */
   def dedupedEvents(spark: SparkSession, inputDir: String,
       watermark: String = "10 minutes"): DataFrame = {
-    val schema = resolvedSchema(spark, inputDir)
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inputDir)
-      .withColumn("ts_utc", tsUtcFor(schema))
+    source(spark, inputDir)
       .withWatermark("ts_utc", watermark)
       .dropDuplicatesWithinWatermark("event_id")
       .select(col("event_id"), col("ts_utc"), col("user_id"),
@@ -84,12 +96,8 @@ object EventsStream {
 
   def purchaseAttribution(spark: SparkSession, inputDir: String,
       watermark: String = "10 minutes", joinType: String = "inner"): DataFrame = {
-    val schema = resolvedSchema(spark, inputDir)
     def side(tpe: String, prefix: String): DataFrame =
-      spark.readStream
-        .schema(schema)
-        .parquet(inputDir)
-        .withColumn("ts_utc", tsUtcFor(schema))
+      source(spark, inputDir, throttled = false)
         .filter(col("event_type") === tpe)
         .select(col("event_id").as(s"${prefix}_id"),
           col("user_id").as(s"${prefix}_user"),
@@ -299,12 +307,7 @@ object EventsStream {
     */
   def tumblingCounts(spark: SparkSession, inputDir: String,
       watermark: Option[String] = Some("10 minutes")): DataFrame = {
-    val schema = resolvedSchema(spark, inputDir)
-    val src = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inputDir)
-      .withColumn("ts_utc", tsUtcFor(schema))
+    val src = source(spark, inputDir)
     val marked = watermark.fold(src)(w => src.withWatermark("ts_utc", w))
     marked
       .groupBy(window(col("ts_utc"), "1 hour"), col("event_type"))

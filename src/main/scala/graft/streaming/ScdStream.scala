@@ -79,12 +79,7 @@ object ScdStream {
   def versions(spark: SparkSession, inputDir: String,
       watermark: String = "10 minutes"): DataFrame = {
     import spark.implicits._
-    val schema = EventsStream.resolvedSchema(spark, inputDir)
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inputDir)
-      .withColumn("ts_utc", EventsStream.tsUtcFor(schema))
+    EventsStream.source(spark, inputDir)
       .withWatermark("ts_utc", watermark)
       .select(col("user_id"), col("ts_utc"),
         unix_micros(col("ts_utc")).as("ts_us"), col("event_id"), col("value"))

@@ -47,17 +47,21 @@ object UserTotalsStream {
 
   /** Streaming per-user running totals over the events file source.
     * Emits the updated total for every user a micro-batch touches.
+    *
+    * Side effect: sets the SESSION's
+    * `spark.sql.streaming.stateStore.providerClass` to RocksDB, so every
+    * stream started on this session afterwards (HDFS-backed-store
+    * pipelines included) runs on RocksDB too. Callers that mix pipelines
+    * on one session must save and restore the key around this call, as
+    * perfbench's harness and StreamingSpec's totals test do (the
+    * StreamReplaySpec totals tests do not).
     */
   def totals(spark: SparkSession, inputDir: String): DataFrame = {
     import spark.implicits._
-    val schema = EventsStream.resolvedSchema(spark, inputDir)
     // transformWithState needs the column-family-capable store
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inputDir)
+    EventsStream.source(spark, inputDir)
       .select(col("user_id"), col("value"))
       .as[UEvent]
       .groupByKey(_.user_id)

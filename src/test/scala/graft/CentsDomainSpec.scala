@@ -44,6 +44,9 @@ class CentsDomainSpec extends SparkTestBase {
 
   private def checkMoneyColumn(df: DataFrame, name: String,
       maxAbs: Double): Unit = {
+    assert(df.count() > 0L,
+      s"$name: the table is empty, so the money-domain audit has nothing " +
+        "to check — the corpus (or its reader) is broken, not the domain")
     val nNull = df.filter(col(name).isNull).count()
     assert(nNull === 0L,
       s"$name has $nNull NULLs: the non-null money precondition is " +

@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.operators.Temporal
 import graft.sources.Tables
-import graft.streaming.{EventsStream, ScdStream, SessionStream}
+import org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager
+import graft.streaming.{EventsStream, LocalCheckpointFileManager, ScdStream, SessionStream}
 
 /** Structured Streaming pipeline (I4): replay equality with batch, and
   * watermark late-data dropping across micro-batches.
@@ -348,7 +349,14 @@ class StreamingSpec extends SparkTestBase {
     }
   }
 
-  test("restart from checkpoint resumes offsets and dedup state (no reprocess, no dup)") {
+  /** Two AvailableNow runs of dedupedEvents on ONE checkpoint: run 1 sees
+    * ids 1-3; run 2 sees id 3 re-synced at its original ts (dedup state
+    * must survive the restart, so it is dropped) plus a new id 4, and must
+    * not reprocess the already-committed file. `managers` names the
+    * checkpoint file manager class each run writes with (None = the
+    * session's own). Returns the sink's event_id -> count map.
+    */
+  private def restartIds(managers: (Option[String], Option[String])): Map[Long, Long] = {
     val spark2 = spark
     import spark2.implicits._
     val inDir = Files.createTempDirectory("graft_stream_ckpt_in")
@@ -367,25 +375,51 @@ class StreamingSpec extends SparkTestBase {
         .findFirst().get()
       Files.move(part, inDir.resolve(name), StandardCopyOption.REPLACE_EXISTING)
     }
-    def run(): Unit = {
+    val key = LocalCheckpointFileManager.ConfKey
+    val prev = spark.conf.getOption(key)
+    def run(manager: Option[String]): Unit = {
+      manager.foreach(spark.conf.set(key, _))
       val q = EventsStream.dedupedEvents(spark, inDir.toString)
         .writeStream.format("parquet")
         .option("path", outDir).option("checkpointLocation", ckpt)
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
       assert(q.awaitTermination(120000), "stream did not finish in 2 min")
     }
-    // run 1: three events land
-    writeFile("a.parquet", Seq((1L, base), (2L, base + hour), (3L, base + 10 * hour)))
-    run()
-    // run 2, SAME checkpoint: id 3 re-syncs at its original ts (dedup
-    // state must survive the restart → dropped) plus one new event; the
-    // already-committed file must not be reprocessed (ids 1/2 stay single)
-    writeFile("b.parquet", Seq((3L, base + 10 * hour), (4L, base + 11 * hour)))
-    run()
-    val ids = spark.read.parquet(outDir).groupBy("event_id").count()
+    try {
+      writeFile("a.parquet", Seq((1L, base), (2L, base + hour), (3L, base + 10 * hour)))
+      run(managers._1)
+      writeFile("b.parquet", Seq((3L, base + 10 * hour), (4L, base + 11 * hour)))
+      run(managers._2)
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+    spark.read.parquet(outDir).groupBy("event_id").count()
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(ids === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L),
+  }
+
+  private val exactlyOnce = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L)
+
+  test("restart from checkpoint resumes offsets and dedup state (no reprocess, no dup)") {
+    val ids = restartIds((None, None))
+    assert(ids === exactlyOnce,
       s"restart must resume offsets and state exactly-once, got $ids")
+  }
+
+  // A checkpoint is shared state across Spark versions and confs: one
+  // written by Spark's default manager must resume under graft's, and one
+  // graft's wrote must stay readable by stock Spark.
+  private val stockManager = classOf[FileContextBasedCheckpointFileManager].getName
+  private val graftManager = classOf[LocalCheckpointFileManager].getName
+
+  test("restart across managers: Spark default checkpoint resumes under graft's manager") {
+    val ids = restartIds((Some(stockManager), Some(graftManager)))
+    assert(ids === exactlyOnce, s"default -> graft restart lost exactly-once: $ids")
+  }
+
+  test("restart across managers: graft's checkpoint resumes under Spark's default manager") {
+    val ids = restartIds((Some(graftManager), Some(stockManager)))
+    assert(ids === exactlyOnce, s"graft -> default restart lost exactly-once: $ids")
   }
 
   test("late rows beyond the watermark are dropped between micro-batches") {
